@@ -302,16 +302,28 @@ CONTROL_EXCLUDED = {
     # r11: dq12 gained the adaptive approx-prescreen (exact Expand only
     # over near-key candidates) — code change, leaves the control.
     "dq12_key_discovery",
+    # The graph family now runs on one shared iteration driver, edge
+    # builder and oracle-chain generator (operators/graph.py): the
+    # members' Spark plans and oracles are unchanged, but their code
+    # changed directly or through those helpers, so they leave the
+    # control.
+    "gr05_kcore",
+    "gr06_onion_layers",
+    "gr07_lpa_communities",
+    "gr08_bfs_hops",
+    "gr09_link_prediction",
+    "gr10_degree_assortativity",
+    "gr11_clustering_coefficient",
 }
 
 # The FROZEN r10 control basis (VERDICT r10 #3): BENCH_R4 minus the six
 # r10 exclusions, spelled out so the denominator of
 # ``headline_over_control`` is a named, pinned artifact rather than a
 # set difference that silently shifts when CONTROL_EXCLUDED grows. The
-# r10 reference reading on this basis is 0.2777
-# (plans/r10_bench_after2.log); r11's ratio is comparable to that
-# number if and only if the basis members' code is unchanged —
-# tests/test_bench_control.py pins both the membership and each
+# r10 reference reading on the current basis is 0.4452
+# (plans/r10_bench_after2.log, recomputed below); a later ratio is
+# comparable to that number if and only if the basis members' code is
+# unchanged — tests/test_bench_control.py pins both the membership and each
 # member's source. If a member MUST change in a later round, exclude it
 # via CONTROL_EXCLUDED as before AND recompute the prior round's ratio
 # on the shrunk basis from its committed bench log, so two comparable
@@ -323,12 +335,16 @@ CONTROL_EXCLUDED = {
 # r11 open  (plans/r11_bench_before.log)  headline 13.364 / control 37.161 = 0.3596
 # (The r10-published 0.2777 sat on the pre-er04-exclusion 42-member
 # denominator; on the frozen 41-member basis it recomputes to 0.2920.)
+# Graph-driver note: gr05-gr11 left the basis (shared iteration
+# driver), so the operative basis is these 33 members. Readings
+# recomputed on THIS basis from the same committed logs:
+# r10 close (plans/r10_bench_after2.log)  headline 14.526 / control 32.625 = 0.4452
+# r11 open  (plans/r11_bench_before.log)  headline 13.364 / control 26.761 = 0.4994
+# r11 close (plans/r11_bench_after2.log)  headline 15.945 / control 27.741 = 0.5748
 CONTROL_BASIS_R10 = (
-    "gr05_kcore",
     "sim12_ivf_mmr_rerank",
     "dq06_k_anonymity",
     "dq07_k_anonymity_suppress",
-    "gr06_onion_layers",
     "sim14_pq_knn_join",
     "tx13_bigram_surprisal",
     "dq08_ks_drift",
@@ -339,17 +355,13 @@ CONTROL_BASIS_R10 = (
     "dq10_mad_outliers",
     "ts09_seasonal_naive_backtest",
     "dq11_benford_digits",
-    "gr07_lpa_communities",
     "ml06_threshold_sweep",
     "ab01_experiment_readout",
-    "gr08_bfs_hops",
     "ts10_linear_trend",
-    "gr09_link_prediction",
     "tx16_collocations",
     "dq13_l_diversity",
     "ts11_cusum_changepoint",
     "inc03_incremental_distinct",
-    "gr10_degree_assortativity",
     "tp17_decontaminate_train",
     "ts12_weekday_seasonality",
     "dd14_ngram_novelty",
@@ -360,7 +372,6 @@ CONTROL_BASIS_R10 = (
     "sim15_ivf_recall_eval",
     "a30_grouped_string_agg",
     "j12_null_safe_join",
-    "gr11_clustering_coefficient",
     "wh04_scd2_merge",
     "f25_id_gap_islands",
     "ts13_seasonal_anomaly",
@@ -596,7 +607,7 @@ def main() -> None:
         # cancels the uniform host-state inflation PERF.md documents
         # (the r4 group drifted 58.4→91.2 s across r6-r8 sessions with
         # zero code change while per-query medians held). r10 reference
-        # reading on this exact basis: 0.2777.
+        # reading on this exact basis: 0.4452.
         "control_s": control_s,
         "headline_over_control": round(headline_value / control_s, 4),
         "queries": {k: round(v, 2) for k, v in timings.items()},

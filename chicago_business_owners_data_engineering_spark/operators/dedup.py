@@ -477,33 +477,24 @@ def neardup_components(
     return components_from_pairs(pairs)
 
 
-def components_from_pairs(pairs: DataFrame, engine: str = "large_star") -> DataFrame:
+def components_from_pairs(pairs: DataFrame) -> DataFrame:
     """Connected components over a (doc_a, doc_b) pair relation.
 
-    The default engine is the alternating large-star/small-star
-    algorithm (graph.components_large_small_star): O(log n) rounds
-    REGARDLESS of graph diameter, ~4 bounded node-keyed shuffles per
-    round. Near-dup graphs are usually shallow, but entity graphs and
-    incremental quotient graphs can carry long chains, and a
-    diameter-bound engine silently degrades to thousands of shuffle
-    rounds there — so the scale-safe engine is the default and
-    every consumer (dd06/dd07/er02/er03/ml03/inc02, curation funnel)
-    inherits it.
-
-    ``engine="propagation"`` selects min-label propagation — one
-    shuffle per round but rounds = diameter — kept as the independent
-    twin for equivalence tests and as the cheaper choice when the
-    caller KNOWS the graph is shallow.
+    Runs the alternating large-star/small-star algorithm
+    (graph.components_large_small_star): O(log n) rounds REGARDLESS of
+    graph diameter, ~4 bounded node-keyed shuffles per round. Near-dup
+    graphs are usually shallow, but entity graphs and incremental
+    quotient graphs can carry long chains, and a diameter-bound engine
+    silently degrades to thousands of shuffle rounds there — so every
+    consumer (dd06/dd07/er02/er03/ml03/inc02, curation funnel) gets the
+    scale-safe engine. :func:`components_propagation` is the
+    independent twin the equivalence tests compare it against.
     """
-    if engine == "large_star":
-        # Lazy import: graph.py deliberately never imports dedup, so
-        # this direction is cycle-free regardless of registry order.
-        from .graph import components_large_small_star
+    # Lazy import: graph.py deliberately never imports dedup, so
+    # this direction is cycle-free regardless of registry order.
+    from .graph import components_large_small_star
 
-        return components_large_small_star(pairs)
-    if engine != "propagation":
-        raise ValueError(f"unknown component engine {engine!r}")
-    return components_propagation(pairs)
+    return components_large_small_star(pairs)
 
 
 def components_propagation(pairs: DataFrame) -> DataFrame:
@@ -512,14 +503,14 @@ def components_propagation(pairs: DataFrame) -> DataFrame:
     Driver-coordinated label propagation (the dataflow form of
     Pregel/GraphX): each round every node takes the min of its own and
     its neighbors' labels — one shuffle keyed on node per round, rounds
-    = graph diameter. ``localCheckpoint`` after each round truncates
-    lineage so the plan doesn't grow with iterations. Convergence is an
-    exact fixpoint (no label changed), not a fixed round count.
+    = graph diameter. Runs in graph.iterate's fixpoint mode, so each
+    round's lazy checkpoint truncates lineage and is materialized by
+    the convergence probe. Convergence is an exact fixpoint (no label
+    changed), not a fixed round count.
     """
-    directed = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = directed.union(
-        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    from .graph import bidirectional, iterate, last_round, probe_unchanged
+
+    edges = bidirectional(pairs, "doc_a", "doc_b").localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -532,29 +523,20 @@ def components_propagation(pairs: DataFrame) -> DataFrame:
         # overflow on a petabyte graph; decimal(38,0) cannot.
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
+    def step(labels: DataFrame) -> DataFrame:
+        nbr = edges.join(labels, edges["src"] == labels["node"]).select(
+            F.col("dst").alias("node"), "label"
+        )
+        return labels.unionByName(nbr).groupBy("node").agg(F.min("label").alias("label"))
+
     # Convergence check without a labels⋈labels join: min-propagation
     # labels are monotonically non-increasing, so the (exact) label sum
     # is strictly smaller after any change — sum equality IS the
     # fixpoint certificate, at the cost of one tiny aggregate per round
     # over the already-checkpointed relation.
-    prev_sum = label_sum(labels)
-    while True:
-        nbr = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "label"
-        )
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            # Lazy: the label_sum aggregate right below materializes the
-            # checkpoint in the same job (the large-star fusion, r10).
-            .localCheckpoint(eager=False)
-        )
-        labels = new_labels
-        new_sum = label_sum(labels)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+    _, labels = last_round(
+        iterate(labels, step, converged=probe_unchanged(label_sum, labels))
+    )
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 

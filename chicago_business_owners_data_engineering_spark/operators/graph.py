@@ -31,6 +31,10 @@ the algorithm choice is the beyond-reference scale path.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from functools import reduce
+from itertools import count, islice
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +45,106 @@ from ..registry import query
 # peer import from dedup would re-enter dedup half-initialized when
 # graph is imported first (the registry imports all operator modules).
 from .shared_oracles import DD06_COMPONENT_CTE as _DD06_COMPONENT_CTE
+
+
+# ---------------------------------------------------------------------------
+# Shared iteration scaffolding: the edge view, the per-round driver and
+# the unrolled oracle chain every graph operator below is built from.
+# ---------------------------------------------------------------------------
+
+
+def bidirectional(
+    edges: DataFrame, a: str = "part_a", b: str = "part_b", *carry
+) -> DataFrame:
+    """Both orientations of every undirected edge → (src, dst, *carry).
+
+    The adjacency view of the whole family: every node sees all of its
+    neighbors as ``dst`` rows keyed on ``src``. ``carry`` columns (e.g.
+    an edge weight) ride along unchanged in both orientations.
+    """
+    return edges.select(F.col(a).alias("src"), F.col(b).alias("dst"), *carry).unionByName(
+        edges.select(F.col(b).alias("src"), F.col(a).alias("dst"), *carry)
+    )
+
+
+def _nodes(bidir: DataFrame) -> DataFrame:
+    """Distinct node ids of a bidirectional edge relation → (node)."""
+    return bidir.select(F.col("src").alias("node")).distinct()
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int | None = None,
+    converged: Callable[[DataFrame], bool] | None = None,
+    max_rounds: int | None = None,
+) -> Iterator[DataFrame]:
+    """Yield ``state``, then each round's ``step(state)`` — the graph
+    family's one per-round driver and its one checkpoint policy.
+
+    - **Fixed rounds** (``rounds``, no ``converged``): each round is
+      localCheckpointed EAGERLY. The next round references it on
+      several join sides; the checkpoint stops the lazy unrolled plan
+      re-deriving round r−1 per reference and keeps lineage shallow.
+    - **Fixpoint** (``converged(state) -> bool``): each checkpoint is
+      LAZY and the convergence probe that follows materializes it — one
+      job per round instead of checkpoint + probe (r10; lineage still
+      truncates at the checkpoint). Stops after the first round the
+      probe accepts; raises after ``max_rounds`` (None = unbounded).
+
+    ``state`` itself is yielded as given (callers checkpoint their
+    initial relation). Drain with :func:`last_round`, or keep the whole
+    trajectory when consecutive rounds are compared (onion layers).
+    """
+    yield state
+    fixed = converged is None
+    for _ in range(rounds) if fixed else islice(count(), max_rounds):
+        state = step(state).localCheckpoint(eager=fixed)
+        yield state
+        if not fixed and converged(state):
+            return
+    if not fixed:
+        raise RuntimeError(f"no fixpoint after {max_rounds} rounds")
+
+
+def last_round(states: Iterator[DataFrame]) -> tuple[int, DataFrame]:
+    """Drain an :func:`iterate` trajectory → (rounds run, final state)."""
+    for rounds, state in enumerate(states):
+        pass
+    return rounds, state
+
+
+def probe_unchanged(
+    probe: Callable[[DataFrame], object], state: DataFrame
+) -> Callable[[DataFrame], bool]:
+    """A fixpoint test for :func:`iterate`: converged once ``probe`` (one
+    small aggregate) returns the same value as the round before.
+    ``state`` is the initial relation, probed once up front."""
+    last = probe(state)
+
+    def converged(nxt: DataFrame) -> bool:
+        nonlocal last
+        value = probe(nxt)
+        unchanged, last = value == last, value
+        return unchanged
+
+    return converged
+
+
+def unrolled_chain(round_sql: Callable[[int], str], rounds: int) -> str:
+    """The oracle twin of a fixed-round :func:`iterate`: the CTEs of
+    rounds 1..``rounds``, each ``round_sql(r)`` reading round r−1's."""
+    return "".join(round_sql(r) for r in range(1, rounds + 1))
+
+
+# Head of every unrolled co-purchase chain: the bidirectional edge CTE
+# after ``copairs``. AS MATERIALIZED because each round references it
+# again (see _kcore_chain for why DuckDB's default inlining explodes).
+_E0_HEAD = """
+    , e0 AS MATERIALIZED (
+        SELECT part_a AS src, part_b AS dst FROM copairs
+        UNION ALL SELECT part_b, part_a FROM copairs
+    )"""
 
 
 def _canonical(pairs: DataFrame) -> DataFrame:
@@ -65,9 +169,7 @@ def _large_star(canon: DataFrame) -> DataFrame:
     is needed. One partial-agg groupBy + one join, both keyed on the
     node id.
     """
-    edges = canon.select(
-        F.col("big").alias("src"), F.col("small").alias("dst")
-    ).unionByName(canon.select(F.col("small").alias("src"), F.col("big").alias("dst")))
+    edges = bidirectional(canon, "big", "small")
     mins = edges.groupBy("src").agg(F.min("dst").alias("mn"))
     mins = mins.select("src", F.least("mn", "src").alias("m"))
     return (
@@ -98,6 +200,27 @@ def _small_star(canon: DataFrame) -> DataFrame:
     return relinked
 
 
+def _is_star_forest(canon: DataFrame) -> bool:
+    """Every ``big`` occurs once and no ``big`` is also a ``small``."""
+    viol = (
+        canon.select(F.col("big").alias("node"), F.lit(1).alias("b"), F.lit(0).alias("s"))
+        .unionAll(
+            canon.select(
+                F.col("small").alias("node"), F.lit(0).alias("b"), F.lit(1).alias("s")
+            )
+        )
+        .groupBy("node")
+        .agg(F.sum("b").alias("nb"), F.max("s").alias("ns"))
+        .select(
+            F.count(
+                F.when((F.col("nb") > 1) | ((F.col("nb") > 0) & (F.col("ns") > 0)), 1)
+            ).alias("viol")
+        )
+        .collect()[0]["viol"]
+    )
+    return viol == 0
+
+
 def components_large_small_star(
     pairs: DataFrame, stats: dict | None = None, max_rounds: int = 64
 ) -> DataFrame:
@@ -118,13 +241,9 @@ def components_large_small_star(
     full large+small rounds — the pytest asserts the logarithmic bound
     on a long chain where propagation would need diameter rounds.
     """
-    # Lazy checkpoints, materialized BY the convergence probe that
-    # follows: an eager localCheckpoint runs one job to materialize and
-    # the probe a second over the checkpointed partitions; letting the
-    # probe trigger the checkpoint fuses both into ONE job per round
-    # (r10 — halves the driver-coordinated jobs of every fixpoint
-    # consumer: dd06/dd07/dd08/er02/er03/ml03/ml04/inc02/tp23).
-    # Lineage still truncates at the checkpoint exactly as before.
+    # Fixpoint mode of :func:`iterate`: the star probe materializes each
+    # round's lazy checkpoint, one job per round for every component
+    # consumer (dd06/dd07/dd08/er02/er03/ml03/ml04/inc02/tp23).
     #
     # Convergence = "the round's output IS a star forest", detected
     # directly (r10): every big occurs exactly once AND no node is
@@ -146,32 +265,14 @@ def components_large_small_star(
     # the extraction below already requires. A graph that never
     # star-converges now raises at max_rounds instead of silently
     # extracting from a non-star fixpoint — strictly safer.
-    canon = _canonical(pairs).localCheckpoint(eager=False)
-    rounds = 0
-    while rounds < max_rounds:
-        nxt = _small_star(_large_star(canon)).localCheckpoint(eager=False)
-        rounds += 1
-        viol = (
-            nxt.select(F.col("big").alias("node"), F.lit(1).alias("b"), F.lit(0).alias("s"))
-            .unionAll(
-                nxt.select(
-                    F.col("small").alias("node"), F.lit(0).alias("b"), F.lit(1).alias("s")
-                )
-            )
-            .groupBy("node")
-            .agg(F.sum("b").alias("nb"), F.max("s").alias("ns"))
-            .select(
-                F.count(
-                    F.when((F.col("nb") > 1) | ((F.col("nb") > 0) & (F.col("ns") > 0)), 1)
-                ).alias("viol")
-            )
-            .collect()[0]["viol"]
+    rounds, canon = last_round(
+        iterate(
+            _canonical(pairs).localCheckpoint(eager=False),
+            lambda c: _small_star(_large_star(c)),
+            converged=_is_star_forest,
+            max_rounds=max_rounds,
         )
-        canon = nxt
-        if viol == 0:
-            break
-    else:
-        raise RuntimeError(f"no star-forest fixpoint after {max_rounds} rounds")
+    )
     if stats is not None:
         stats["rounds"] = rounds
     # Star fixpoint: every edge is (member, root); roots label themselves.
@@ -226,6 +327,19 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     runs inside ~4-row order groups. ``distinct`` collapses repeat
     co-purchases — the downstream graph ops are unweighted.
     """
+    return (
+        _copairs(lineitem)
+        .select(
+            F.col("a.l_partkey").alias("part_a"),
+            F.col("b.l_partkey").alias("part_b"),
+        )
+        .distinct()
+    )
+
+
+def _copairs(lineitem: DataFrame) -> DataFrame:
+    """Every (a, b) pair of distinct 1995 (order, part) items sharing an
+    order with a.l_partkey < b.l_partkey — one row per shared order."""
     items = (
         lineitem.filter(
             (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
@@ -235,19 +349,12 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
         .distinct()
     )
     a, b = items.alias("a"), items.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.l_orderkey") == F.col("b.l_orderkey"),
-                F.col("a.l_partkey") < F.col("b.l_partkey"),
-            ],
-        )
-        .select(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .distinct()
+    return a.join(
+        b,
+        on=[
+            F.col("a.l_orderkey") == F.col("b.l_orderkey"),
+            F.col("a.l_partkey") < F.col("b.l_partkey"),
+        ],
     )
 
 
@@ -297,16 +404,8 @@ def pagerank_integer(
     the unrolled plan stays shallow (no per-round checkpoint needed).
     """
     wcols = [F.col(weight_col).alias("w")] if weight_col else []
-    bidir = (
-        edges_canon.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst"), *wcols
-        )
-        .unionByName(
-            edges_canon.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst"), *wcols
-            )
-        )
-        .localCheckpoint(eager=True)
+    bidir = bidirectional(edges_canon, "part_a", "part_b", *wcols).localCheckpoint(
+        eager=True
     )
     mass = F.sum("w") if weight_col else F.count("*")
     deg = bidir.groupBy("src").agg(mass.alias("deg")).withColumnRenamed(
@@ -363,11 +462,7 @@ def triangle_counts(edges_canon: DataFrame) -> DataFrame:
     which is what lets the DuckDB oracle use the simple id-ordered
     3-way self-join and still compare exactly.
     """
-    bidir = edges_canon.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
+    bidir = bidirectional(edges_canon)
     deg = bidir.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed(
         "src", "node"
     )
@@ -446,19 +541,6 @@ def _pagerank_oracle_chain(
     else:
         teleport = f"({PR_TELEPORT_PCT} * b.base) // 100"
         r0_rank = "base"
-    it = "".join(
-        f"""
-    , s{i} AS (
-        SELECT e.dst AS node, CAST(SUM({contrib}) AS BIGINT) AS s
-        FROM r{i - 1} r JOIN edges e ON r.node = e.src GROUP BY 1
-    ), r{i} AS (
-        SELECT b.node, b.deg{bseed}, b.base,
-               {teleport}
-               + ({100 - PR_TELEPORT_PCT} * s.s) // 100 AS rank
-        FROM base b JOIN s{i} s ON b.node = s.node
-    )"""
-        for i in range(1, PR_ITERATIONS + 1)
-    )
     return (
         f"""
     , deg AS (
@@ -471,7 +553,19 @@ def _pagerank_oracle_chain(
     ), r0 AS (
         SELECT node, deg{seed_col}, base, {r0_rank} AS rank FROM base
     )"""
-        + it
+        + unrolled_chain(
+            lambda i: f"""
+    , s{i} AS (
+        SELECT e.dst AS node, CAST(SUM({contrib}) AS BIGINT) AS s
+        FROM r{i - 1} r JOIN edges e ON r.node = e.src GROUP BY 1
+    ), r{i} AS (
+        SELECT b.node, b.deg{bseed}, b.base,
+               {teleport}
+               + ({100 - PR_TELEPORT_PCT} * s.s) // 100 AS rank
+        FROM base b JOIN s{i} s ON b.node = s.node
+    )""",
+            PR_ITERATIONS,
+        )
     )
 
 
@@ -666,23 +760,8 @@ def copurchase_edges_weighted(lineitem: DataFrame) -> DataFrame:
     groupBy keeps the number of distinct 1995 orders each pair shared —
     the natural edge weight for the ranking variants.
     """
-    items = (
-        lineitem.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = items.alias("a"), items.alias("b")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.l_orderkey") == F.col("b.l_orderkey"),
-                F.col("a.l_partkey") < F.col("b.l_partkey"),
-            ],
-        )
+        _copairs(lineitem)
         .groupBy(
             F.col("a.l_partkey").alias("part_a"),
             F.col("b.l_partkey").alias("part_b"),
@@ -817,47 +896,48 @@ def kcore_bounded(
     deterministic at any SF whether or not converged, which is what
     makes the differential check exact; KCORE_ROUNDS is sized past the
     measured fixpoint at every test SF, so the answer IS the true
-    k-core here. ``rounds=None``: run to fixpoint with a driver loop
-    (one count() per round — the standard coordinator pattern for
-    unbounded iteration; the pytest proves it matches the bounded form).
+    k-core here. ``rounds=None``: run to fixpoint in :func:`iterate`'s
+    fixpoint mode (one count() per round — the standard coordinator
+    pattern for unbounded iteration; the pytest proves it matches the
+    bounded form).
 
     Scale: each round is two semi-joins keyed on the node id plus one
     map-side-combined degree count — shuffles stay on one key family.
-    The alive set shrinks monotonically and is localCheckpoint-ed per
-    round, both to stop the unrolled lazy plan re-deriving round r-1
-    twice per reference and to keep lineage shallow. Round count is
-    bounded by the peel depth, which for power-law graphs is small
-    (degeneracy ordering, not diameter).
+    The alive set shrinks monotonically and is checkpointed per round
+    by :func:`iterate`. Round count is bounded by the peel depth, which
+    for power-law graphs is small (degeneracy ordering, not diameter).
+    The last round's degrees are read straight off alive_{R−1}.
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
+    bidir, alive, peel = _peeling(edges_canon, k)
+    if rounds is None:
+        states = iterate(alive, peel, converged=probe_unchanged(DataFrame.count, alive))
+    else:
+        states = iterate(alive, peel, rounds - 1)
+    _, alive = last_round(states)
+    return _core_degrees(bidir, alive).filter(F.col("core_deg") >= k).select(
+        "node", "core_deg"
     )
-    alive = bidir.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    deg = None
-    prev_n = alive.count() if rounds is None else None
-    r = 0
-    while True:
-        e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
-        e = e.join(alive, e["dst"] == alive["node"], "left_semi")
-        deg = e.groupBy("src").agg(F.count("*").alias("core_deg")).withColumnRenamed(
-            "src", "node"
-        )
-        alive = (
-            deg.filter(F.col("core_deg") >= k).select("node").localCheckpoint(eager=True)
-        )
-        r += 1
-        if rounds is None:
-            n = alive.count()
-            if n == prev_n:
-                break
-            prev_n = n
-        elif r >= rounds:
-            break
-    return deg.filter(F.col("core_deg") >= k).select("node", "core_deg")
+
+
+def _core_degrees(bidir: DataFrame, alive: DataFrame) -> DataFrame:
+    """(node, core_deg): each node's degree within the alive subgraph."""
+    e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
+    e = e.join(alive, e["dst"] == alive["node"], "left_semi")
+    return e.groupBy("src").agg(F.count("*").alias("core_deg")).withColumnRenamed(
+        "src", "node"
+    )
+
+
+def _peeling(edges_canon: DataFrame, k: int):
+    """The k-peel recurrence shared by k-core and onion layers →
+    (bidir, alive_0, peel step) where peel(alive) = {deg within alive ≥ k}."""
+    bidir = bidirectional(edges_canon).localCheckpoint(eager=True)
+    alive = _nodes(bidir).localCheckpoint(eager=True)
+
+    def peel(alive: DataFrame) -> DataFrame:
+        return _core_degrees(bidir, alive).filter(F.col("core_deg") >= k).select("node")
+
+    return bidir, alive, peel
 
 
 def _kcore_chain(k: int, rounds: int) -> str:
@@ -871,23 +951,21 @@ def _kcore_chain(k: int, rounds: int) -> str:
     gr06 oracle that never finished. Materialization makes the chain
     cost linear in rounds, matching how the Spark side
     localCheckpoints each round."""
-    head = """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), alive0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0)"""
-    body = "".join(
-        f"""
+    return (
+        _E0_HEAD
+        + ", alive0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0)"
+        + unrolled_chain(
+            lambda r: f"""
     , d{r} AS MATERIALIZED (
         SELECT e.src AS node, COUNT(*) AS core_deg
         FROM e0 e
         JOIN alive{r - 1} a ON e.src = a.node
         JOIN alive{r - 1} b ON e.dst = b.node
         GROUP BY 1
-    ), alive{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE core_deg >= {k})"""
-        for r in range(1, rounds + 1)
+    ), alive{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE core_deg >= {k})""",
+            rounds,
+        )
     )
-    return head + body
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
@@ -950,33 +1028,14 @@ def onion_layers(
     peeled in the same round has no degree row at all, and the
     difference form catches it where the filter form would drop it).
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    alive = bidir.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    layers = []
-    for r in range(1, rounds + 1):
-        e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
-        e = e.join(alive, e["dst"] == alive["node"], "left_semi")
-        deg = e.groupBy("src").agg(F.count("*").alias("core_deg")).withColumnRenamed(
-            "src", "node"
-        )
-        alive_next = (
-            deg.filter(F.col("core_deg") >= k).select("node").localCheckpoint(eager=True)
-        )
-        layers.append(
-            alive.exceptAll(alive_next).select("node", F.lit(r).alias("layer"))
-        )
-        alive = alive_next
-    layers.append(alive.select("node", F.lit(0).alias("layer")))
-    out = layers[0]
-    for df in layers[1:]:
-        out = out.unionByName(df)
-    return out
+    _, alive0, peel = _peeling(edges_canon, k)
+    alive = list(iterate(alive0, peel, rounds))
+    layers = [
+        prev.exceptAll(nxt).select("node", F.lit(r).alias("layer"))
+        for r, (prev, nxt) in enumerate(zip(alive, alive[1:]), 1)
+    ]
+    layers.append(alive[-1].select("node", F.lit(0).alias("layer")))
+    return reduce(DataFrame.unionByName, layers)
 
 
 def _onion_oracle(rounds: int) -> str:
@@ -1064,53 +1123,39 @@ def label_propagation(
     Scale shape: each round is one edge⋈label join (node-keyed), one
     map-side-combined (node, label) count, and one per-node argmax
     window over the count relation — shuffles stay on the node key
-    family, and each round's label relation is localCheckpointed (the
-    kcore_bounded rationale: stop the unrolled lazy plan re-deriving
-    round r−1 per reference).
+    family, and each round's label relation is checkpointed by
+    :func:`iterate`.
     """
     from pyspark.sql import Window
 
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        bidir.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
+    bidir = bidirectional(edges_canon).localCheckpoint(eager=True)
+    labels = _nodes(bidir).select("node", F.col("node").alias("label"))
+    labels = labels.localCheckpoint(eager=True)
     w = Window.partitionBy("src").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(rounds):
-        nb = bidir.join(labels, bidir["dst"] == labels["node"]).select(
-            "src", "label"
-        )
+
+    def vote(labels: DataFrame) -> DataFrame:
+        nb = bidir.join(labels, bidir["dst"] == labels["node"]).select("src", "label")
         cnt = nb.groupBy("src", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        return (
             cnt.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return last_round(iterate(labels, vote, rounds))[1]
 
 
 def _lpa_chain(rounds: int) -> str:
     """Unrolled LPA CTEs after ``copairs``; MATERIALIZED per the
     _kcore_chain lesson (each lab_r is referenced by the next round's
     join — default inlining re-expands the upstream chain)."""
-    head = """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), lab0 AS MATERIALIZED (
+    return (
+        _E0_HEAD
+        + """, lab0 AS MATERIALIZED (
         SELECT DISTINCT src AS node, src AS label FROM e0
     )"""
-    body = "".join(
-        f"""
+        + unrolled_chain(
+            lambda r: f"""
     , lab{r} AS MATERIALIZED (
         SELECT src AS node, label FROM (
             SELECT e.src, l.label, COUNT(*) AS c,
@@ -1120,10 +1165,10 @@ def _lpa_chain(rounds: int) -> str:
             FROM e0 e JOIN lab{r - 1} l ON e.dst = l.node
             GROUP BY e.src, l.label
         ) WHERE rn = 1
-    )"""
-        for r in range(1, rounds + 1)
+    )""",
+            rounds,
+        )
     )
-    return head + body
 
 
 @query(
@@ -1197,17 +1242,10 @@ def bfs_hops(
     shuffles on the node-key family. The dist relation only ever holds
     REACHED nodes (frontier-compact: unreached nodes never materialize
     a row until a relaxation reaches them), and each round is
-    localCheckpointed so the unrolled lazy plan does not re-derive
-    round r−1 per reference (the kcore_bounded rationale).
+    checkpointed by :func:`iterate`.
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes = bidir.select(F.col("src").alias("node")).distinct()
+    bidir = bidirectional(edges_canon).localCheckpoint(eager=True)
+    nodes = _nodes(bidir)
     dist = (
         nodes.filter(F.col("node") % seed_mod == 0)
         .unionByName(nodes.agg(F.min("node").alias("node")))
@@ -1215,54 +1253,71 @@ def bfs_hops(
         .select("node", F.lit(0).cast("long").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+    return min_hops(bidir, dist, rounds)
+
+
+def min_hops(
+    bidir: DataFrame, dist: DataFrame, rounds: int, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """``rounds`` synchronous BFS relaxations of a (*keys, node, dist)
+    relation: each round takes, per (*keys, node), the min over the
+    previous dist and every neighbor's dist + 1. ``keys`` runs one
+    independent BFS per key value in the same relation (gr12 carries
+    its landmark ``seed``); gr08 runs one BFS from a seed set."""
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = bidir.join(dist, bidir["dst"] == dist["node"]).select(
-            F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
+            *keys, F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        return (
+            dist.unionByName(relaxed).groupBy(*keys, "node").agg(F.min("dist").alias("dist"))
         )
-    return dist
+
+    return last_round(iterate(dist, relax, rounds))[1]
 
 
-def _bfs_chain(rounds: int, seed_mod: int) -> str:
-    """Unrolled BFS CTEs after ``copairs``; MATERIALIZED per the
-    _kcore_chain lesson (each d_r is referenced twice by round r+1)."""
-    head = f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), n0 AS MATERIALIZED (
+def _min_hops_chain(state: str, keys: tuple[str, ...], init: str, rounds: int) -> str:
+    """Oracle twin of :func:`min_hops` after ``copairs``: e0 and its node
+    set n0, the caller's ``init`` CTEs (ending in ``{state}0``), then one
+    MATERIALIZED relaxation CTE per round (per the _kcore_chain lesson:
+    each ``{state}r`` is referenced twice by round r+1)."""
+    k = "".join(f"{c}, " for c in keys)
+    dk = "".join(f"d.{c}, " for c in keys)
+    return (
+        _E0_HEAD
+        + f""", n0 AS MATERIALIZED (
         SELECT DISTINCT src AS node FROM e0
-    ), d0 AS MATERIALIZED (
-        SELECT node, CAST(0 AS BIGINT) AS dist FROM (
-            SELECT node FROM n0 WHERE node % {seed_mod} = 0
-            UNION
-            SELECT MIN(node) FROM n0
-        )
-    )"""
-    body = "".join(
-        f"""
-    , d{r} AS MATERIALIZED (
-        SELECT node, MIN(dist) AS dist FROM (
-            SELECT node, dist FROM d{r - 1}
+    ), {init}"""
+        + unrolled_chain(
+            lambda r: f"""
+    , {state}{r} AS MATERIALIZED (
+        SELECT {k}node, MIN(dist) AS dist FROM (
+            SELECT {k}node, dist FROM {state}{r - 1}
             UNION ALL
-            SELECT e.src AS node, d.dist + 1 AS dist
-            FROM e0 e JOIN d{r - 1} d ON e.dst = d.node
-        ) GROUP BY node
-    )"""
-        for r in range(1, rounds + 1)
+            SELECT {dk}e.src AS node, d.dist + 1 AS dist
+            FROM e0 e JOIN {state}{r - 1} d ON e.dst = d.node
+        ) GROUP BY {k}node
+    )""",
+            rounds,
+        )
     )
-    return head + body
 
 
 @query(
     "gr08_bfs_hops",
     oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + _bfs_chain(BFS_ROUNDS, BFS_SEED_MOD)
+    + _min_hops_chain(
+        "d",
+        (),
+        f"""d0 AS MATERIALIZED (
+        SELECT node, CAST(0 AS BIGINT) AS dist FROM (
+            SELECT node FROM n0 WHERE node % {BFS_SEED_MOD} = 0
+            UNION
+            SELECT MIN(node) FROM n0
+        )
+    )""",
+        BFS_ROUNDS,
+    )
     + f"""
     SELECT COALESCE(d.dist, -1) AS hops, CAST(COUNT(*) AS BIGINT) AS n_nodes
     FROM n0 n LEFT JOIN d{BFS_ROUNDS} d ON n.node = d.node
@@ -1291,14 +1346,10 @@ def gr08_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    nodes = (
-        edges.select(F.col("part_a").alias("node"))
-        .unionByName(edges.select(F.col("part_b").alias("node")))
-        .distinct()
-    )
     dist = bfs_hops(edges)
     return (
-        nodes.join(dist, "node", "left")
+        _nodes(bidirectional(edges))
+        .join(dist, "node", "left")
         .select(F.coalesce(F.col("dist"), F.lit(-1).cast("long")).alias("hops"))
         .groupBy("hops")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -1315,11 +1366,8 @@ LP_TOP = 20
 @query(
     "gr09_link_prediction",
     oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), deg AS MATERIALIZED (
+    + _E0_HEAD
+    + f""", deg AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
     ), nb AS MATERIALIZED (
         SELECT e.src AS w, e.dst AS n
@@ -1366,11 +1414,7 @@ def gr09_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
+    bidir = bidirectional(edges)
     deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nb = (
         bidir.join(deg.filter(F.col("deg") <= LP_MAX_DEG).select("src"), "src")
@@ -1400,11 +1444,8 @@ def gr09_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "gr10_degree_assortativity",
     oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), deg AS MATERIALIZED (
+    + _E0_HEAD
+    + """, deg AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
     ), endp AS (
         SELECT ds.deg AS x, dd.deg AS y
@@ -1458,11 +1499,7 @@ def gr10_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    ).localCheckpoint(eager=True)
+    bidir = bidirectional(edges).localCheckpoint(eager=True)
     deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     endp = (
         bidir.join(deg.select(F.col("src").alias("s"), F.col("deg").alias("x")),
@@ -1558,12 +1595,7 @@ def gr11_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     tcnt = triangle_counts(edges)
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    deg = bidir.groupBy(F.col("src").alias("node")).agg(
+    deg = bidirectional(edges).groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     return (
@@ -1590,39 +1622,19 @@ HARMONIC_K = 8  # fixed landmark panel: the K smallest node ids
 HARMONIC_ROUNDS = 4  # same bounded-radius convention as gr08
 
 
-def _harmonic_chain(rounds: int, k: int) -> str:
-    """Unrolled per-seed BFS CTEs after ``copairs`` (seed carried in the
-    state relation); MATERIALIZED per the _kcore_chain lesson."""
-    head = f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), n0 AS MATERIALIZED (
-        SELECT DISTINCT src AS node FROM e0
-    ), seeds AS MATERIALIZED (
-        SELECT node AS seed FROM n0 ORDER BY node LIMIT {k}
-    ), h0 AS MATERIALIZED (
-        SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds
-    )"""
-    body = "".join(
-        f"""
-    , h{r} AS MATERIALIZED (
-        SELECT seed, node, MIN(dist) AS dist FROM (
-            SELECT seed, node, dist FROM h{r - 1}
-            UNION ALL
-            SELECT d.seed, e.src AS node, d.dist + 1 AS dist
-            FROM e0 e JOIN h{r - 1} d ON e.dst = d.node
-        ) GROUP BY seed, node
-    )"""
-        for r in range(1, rounds + 1)
-    )
-    return head + body
-
-
 @query(
     "gr12_harmonic_centrality",
     oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + _harmonic_chain(HARMONIC_ROUNDS, HARMONIC_K)
+    + _min_hops_chain(
+        "h",
+        ("seed",),
+        f"""seeds AS MATERIALIZED (
+        SELECT node AS seed FROM n0 ORDER BY node LIMIT {HARMONIC_K}
+    ), h0 AS MATERIALIZED (
+        SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds
+    )""",
+        HARMONIC_ROUNDS,
+    )
     + f"""
     SELECT seed,
            CAST(COUNT(CASE WHEN dist >= 1 THEN 1 END) AS BIGINT) AS n_reached,
@@ -1657,24 +1669,13 @@ def gr12_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst")))
-    nodes = bidir.select(F.col("src").alias("node")).distinct()
-    seeds = nodes.orderBy("node").limit(HARMONIC_K).select(F.col("node").alias("seed"))
+    bidir = bidirectional(edges)
+    seeds = _nodes(bidir).orderBy("node").limit(HARMONIC_K)
+    seeds = seeds.select(F.col("node").alias("seed"))
     dist = seeds.select(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=True)
-    for _ in range(HARMONIC_ROUNDS):
-        relaxed = bidir.join(dist, bidir["dst"] == dist["node"]).select(
-            "seed", F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+    dist = min_hops(bidir, dist, HARMONIC_ROUNDS, keys=("seed",))
     return (
         dist.groupBy("seed")
         .agg(

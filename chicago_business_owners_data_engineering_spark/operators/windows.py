@@ -119,12 +119,19 @@ def w04_rank_by_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "w06_group_scores",
     oracle="""
-    SELECT event_id, user_id,
-           COUNT(*) OVER (PARTITION BY user_id) AS user_events,
-           ROUND(AVG(value) OVER (PARTITION BY user_id), 6) AS user_avg_value,
-           CAST(COUNT(DISTINCT event_type) OVER (PARTITION BY user_id) AS BIGINT)
-               AS user_type_diversity
-    FROM events
+    SELECT event_id, user_id, user_events,
+           CAST((20000 * cents + user_events) // (2 * user_events) AS DOUBLE)
+               / 1000000 AS user_avg_value,
+           user_type_diversity
+    FROM (
+        SELECT event_id, user_id,
+               COUNT(*) OVER (PARTITION BY user_id) AS user_events,
+               SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER (PARTITION BY user_id)
+                   AS cents,
+               CAST(COUNT(DISTINCT event_type) OVER (PARTITION BY user_id) AS BIGINT)
+                   AS user_type_diversity
+        FROM events
+    )
     """,
 )
 def w06_group_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,15 +142,31 @@ def w06_group_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't support COUNT(DISTINCT) directly, so diversity is
     size(collect_set()) over the same window — identical semantics,
     still one shuffle on user_id shared by all three windows.
+
+    The mean is rounded to 6 decimals half-up in INTEGER arithmetic on
+    cents (``value`` is cent-exact): ROUND(AVG(double), 6) lands on
+    exact ties (e.g. 331742 cents / 64 = 51.8346875) whose rounding
+    depends on the engine and on the summation order. Operands are
+    nonnegative, so Spark's ``div`` and DuckDB's ``//`` agree.
     """
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
+    cents = F.round(F.col("value") * 100).cast("long")
     return events.select(
         "event_id",
         "user_id",
         F.count("*").over(w).alias("user_events"),
-        F.round(F.avg("value").over(w), 6).alias("user_avg_value"),
+        F.sum(cents).over(w).alias("cents"),
         F.size(F.collect_set("event_type").over(w)).cast("long").alias("user_type_diversity"),
+    ).select(
+        "event_id",
+        "user_id",
+        "user_events",
+        (
+            F.expr("(20000 * cents + user_events) div (2 * user_events)").cast("double")
+            / 1000000
+        ).alias("user_avg_value"),
+        "user_type_diversity",
     )
 
 

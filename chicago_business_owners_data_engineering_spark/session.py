@@ -29,6 +29,36 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+MAX_DEFAULT_DRIVER_MB = 16 * 1024
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """Default driver heap: min(16g, ½ × what the host can commit).
+
+    What the host can commit is ``MemAvailable`` from ``meminfo``,
+    capped by the cgroup v2 limit in ``cgroup_max`` when one is set (a
+    container sees the whole machine's MemAvailable). Half leaves room
+    for the JVM's off-heap use and the Python workers. Returned in MiB
+    (``"7830m"``), the unit both ``-Xms`` and ``spark.driver.memory``
+    accept.
+    """
+    with open(meminfo) as fh:
+        avail_kb = next(
+            int(line.split()[1]) for line in fh if line.startswith("MemAvailable:")
+        )
+    budget_mb = avail_kb // 1024
+    try:
+        with open(cgroup_max) as fh:
+            limit = fh.read().strip()
+    except OSError:
+        limit = "max"
+    if limit != "max":
+        budget_mb = min(budget_mb, int(limit) // (1024 * 1024))
+    return f"{min(MAX_DEFAULT_DRIVER_MB, budget_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "chicago-business-owners-spark",
     master: str | None = None,
@@ -41,7 +71,7 @@ def get_spark(
     harness; on a cluster, leave it unset and let spark-submit decide.
     """
     cpus = default_parallelism()
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     # Commit + pre-touch the whole heap at JVM start (-Xms = -Xmx,
     # AlwaysPreTouch). Measured on this host (virtualized, lazily
     # faulted guest memory): a FIRST-touch page fault costs ~83 µs —
@@ -53,13 +83,9 @@ def get_spark(
     # warm) and pins the heap committed so G1 never uncommits and
     # re-faults it. Standard practice for latency-sensitive JVMs on
     # real clusters too (same flags apply to executors via
-    # spark.executor.extraJavaOptions there). Override via
-    # SPARK_GRAFT_DRIVER_JAVA_OPTS if an environment can't commit Xms
-    # up front.
-    driver_opts = os.environ.get(
-        "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-        f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
-    )
+    # spark.executor.extraJavaOptions there). The default heap is sized
+    # to what the host can commit, so the pre-touch always fits.
+    driver_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or os.environ.get("SPARK_MASTER", f"local[{cpus}]"))

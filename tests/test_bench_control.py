@@ -99,13 +99,13 @@ def test_excluded_are_real_members():
 
 
 # Membership hash of the FROZEN control basis (VERDICT r10 #3). r11
-# dropped dq12 (its plan became adaptive, VERDICT r10 #7), so the
-# operative basis is 40 members; the prior rounds' ratios recomputed on
-# this basis from their committed logs are recorded next to the
-# constant in bench.py. If this assert ever needs editing, recompute
-# the prior round's ratio on the new basis the same way and record
-# both.
-CONTROL_BASIS_R10_SHA = "ab2f6bdabaff86dc"
+# dropped dq12 (its plan became adaptive, VERDICT r10 #7) and the shared
+# graph iteration driver dropped gr05-gr11, so the operative basis is 33
+# members; the prior rounds' ratios recomputed on this basis from their
+# committed logs are recorded next to the constant in bench.py. If this
+# assert ever needs editing, recompute the prior round's ratio on the
+# new basis the same way and record both.
+CONTROL_BASIS_R10_SHA = "274a7f4a85c6e089"
 
 
 def test_control_basis_r10_frozen():

@@ -13,6 +13,7 @@ import random
 
 from chicago_business_owners_data_engineering_spark.operators.dedup import (
     components_from_pairs,
+    components_propagation,
 )
 from chicago_business_owners_data_engineering_spark.operators.graph import (
     components_large_small_star,
@@ -27,21 +28,19 @@ def test_matches_propagation_on_random_graph(spark):
     rng = random.Random(11)
     # Three regimes in one graph: a dense blob, sparse random edges,
     # and singleton pairs — exercises dedup/ER-like cluster shapes.
-    # components_from_pairs defaults to large-star, so the independent
-    # twin is requested explicitly via engine="propagation".
     pairs = [(rng.randint(0, 29), rng.randint(0, 29)) for _ in range(60)]
     pairs += [(100 + rng.randint(0, 199), 100 + rng.randint(0, 199)) for _ in range(80)]
     pairs += [(1000, 1001), (2000, 2001)]
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     assert _components(components_large_small_star(df)) == _components(
-        components_from_pairs(df, engine="propagation")
+        components_propagation(df)
     )
 
 
 def test_default_engine_is_large_star(spark):
-    # The default engine must be the diameter-independent one; a long
-    # chain would be the pathological case for propagation.
+    # Consumers must get the diameter-independent engine; a long chain
+    # would be the pathological case for propagation.
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(95)], "doc_a long, doc_b long"
     )
@@ -305,6 +304,25 @@ def test_bfs_hops_hand_computed(spark):
     assert got == {13: 0, 14: 1, 15: 2, 16: 3, 17: 4}
     # 18, 19 are 5-6 hops out; 20, 21 unreachable — none materialize.
     assert 18 not in got and 20 not in got
+
+    # The same relaxation keyed by landmark (gr12's form): one BFS per
+    # seed in one relation, each seed's distances independent.
+    from chicago_business_owners_data_engineering_spark.operators.graph import (
+        bidirectional,
+        min_hops,
+    )
+
+    seeds = spark.createDataFrame(
+        [(13, 13, 0), (16, 16, 0)], "seed long, node long, dist long"
+    )
+    got = {
+        (r.seed, r.node): r.dist
+        for r in min_hops(bidirectional(edges), seeds, 2, keys=("seed",)).collect()
+    }
+    assert got == {
+        (13, 13): 0, (13, 14): 1, (13, 15): 2,
+        (16, 16): 0, (16, 15): 1, (16, 17): 1, (16, 14): 2, (16, 18): 2,
+    }
 
 
 def test_bfs_seed_fallback_is_min_node(spark):

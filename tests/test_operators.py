@@ -1081,3 +1081,50 @@ def test_f27_time_to_convert_bounds(spark, sf_dir):
     assert 0 <= r["p25_min"] <= r["p50_min"] <= r["p75_min"]
     st03 = {x["stage"]: x["users"] for x in QUERIES["st03_funnel_conversion"](spark, sf_dir).collect()}
     assert r["n_converted"] >= st03["3_purchase_after_click"]
+
+
+def test_group_scores_mean_is_exact_on_rounding_ties(spark, tmp_path):
+    """w06's 6-decimal mean on planted exact ties: 331742 cents over 64
+    events is 51.8346875 (half-up 51.834688) and 3 cents over 2 is
+    0.015. Engine and oracle must agree bit for bit whatever the
+    summation order, which ROUND(AVG(double), 6) could not."""
+    import datetime
+    import random
+
+    import duckdb
+
+    from chicago_business_owners_data_engineering_spark import registry
+
+    rng = random.Random(6)
+    cents = [rng.randint(100, 9999) for _ in range(63)]
+    cents.append(331742 - sum(cents))
+    users = [(1, c) for c in cents] + [(2, 1), (2, 2), (3, 1), (3, 1), (3, 2)]
+    rng.shuffle(users)
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (i, ts, u, ("view", "click", "buy")[i % 3], c / 100, "{}")
+        for i, (u, c) in enumerate(users)
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).repartition(4).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+
+    cols = "event_id user_id user_events user_avg_value user_type_diversity".split()
+    engine = {
+        tuple(r[c] for c in cols)
+        for r in registry.get_queries()["w06_group_scores"](spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet/*.parquet'"
+    )
+    oracle = {
+        tuple(r) for r in con.execute(
+            f"SELECT {', '.join(cols)} FROM ({registry.get_oracles()['w06_group_scores']})"
+        ).fetchall()
+    }
+    assert engine == oracle
+    means = {r[1]: r[3] for r in engine}
+    assert means == {1: 51.834688, 2: 0.015, 3: 0.013333}

@@ -2,7 +2,7 @@
 # Round-close verification chain — the exact sequence every round's
 # committed artifacts come from (see .claude/skills/verify/SKILL.md):
 #   1. full differential sweep on a DRIVER-LIKE vanilla session
-#      (rewrites CORRECTNESS_LOCAL_r06.json — bump the name per round)
+#      (writes CORRECTNESS_LOCAL_<round>.json)
 #   2. physical-plan audit over the whole registry (rewrites PLANS.md;
 #      0 warnings is the CI gate)
 #   3. full pytest suite
@@ -10,9 +10,11 @@
 #      compact parseable headline)
 # Runs ~55 min at sf0.01/sf0.1 on local[32]. Exits nonzero on the
 # first failing stage.
+#
+# Usage: tools/round_close.sh <round>    (e.g. r12; required)
 set -euo pipefail
 cd "$(dirname "$0")/.."
-ROUND="${1:-r06}"
+ROUND="${1:?usage: tools/round_close.sh <round> (e.g. r12)}"
 python tools/check_oracle.py --vanilla --json "CORRECTNESS_LOCAL_${ROUND}.json" /root/testdata/sf0.01
 python tools/plan_audit.py /root/testdata/sf0.01
 python -m pytest tests/ -q
